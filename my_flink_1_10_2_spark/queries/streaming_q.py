@@ -5,6 +5,11 @@ inside the query function and return the materialized result, so the
 driver's DuckDB oracle can grade operators whose semantics are streaming
 (changelogs, retractions) against the equivalent batch SQL.
 
+Ordered replays go through ``StreamExecutionEnvironment.from_batches``,
+the one replay contract: each batch DataFrame becomes exactly one file,
+file mtime order equals batch order (batch *i* is micro-batch *i*), and a
+watermark sentinel is just one more batch at the end of the list.
+
 Reference: StreamingJoinOperator.java:37 (unbounded join + retractions),
 RetractStreamTableSink semantics (BaseRow.java:40-47).
 """
@@ -33,8 +38,21 @@ def _epoch_wave(ts_col: str = "ts"):
     )
 
 
-def _distinct_waves(src) -> list[int]:
-    return sorted(r[0] for r in src.select("__wave").distinct().collect())
+def _wave_batches(src) -> list:
+    """One replay batch per distinct ``__wave`` value, in wave order."""
+    waves = sorted(r[0] for r in src.select("__wave").distinct().collect())
+    return [src.where(F.col("__wave") == w).drop("__wave") for w in waves]
+
+
+_WEEKS = ["2024-01-01", "2024-01-08", "2024-01-15", "2024-01-22", "2024-02-01"]
+
+
+def _week_batches(src) -> list:
+    """One replay batch per fixed ``ts`` week of the fixture, in order."""
+    return [
+        src.where((F.col("ts") >= lo) & (F.col("ts") < hi))
+        for lo, hi in zip(_WEEKS, _WEEKS[1:])
+    ]
 
 
 @register(
@@ -723,40 +741,12 @@ def q_upsert_stream_materialized(spark, sf_dir):
     try:
         # split by version so replay order == version order
         bounds = [0, 3000, 6000, 9000, 12000, 10**9]
-        for i in range(len(bounds) - 1):
-            (
-                log.where(
-                    (F.col("version") >= bounds[i])
-                    & (F.col("version") < bounds[i + 1])
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{work}/log/b{i:03d}")
-            )
-        # one flat dir of one file per range, named in replay order
-        import glob as _glob
-        import os as _os
-        import shutil as _shutil
-
-        _os.makedirs(f"{work}/replay")
-        import time as _time
-
-        base_ts = _time.time() - 3600
-        seq = 0
-        for i in range(len(bounds) - 1):
-            parts = _glob.glob(f"{work}/log/b{i:03d}/part-*.parquet")
-            for j, p in enumerate(sorted(parts)):
-                dst = f"{work}/replay/part-{i:03d}-{j}.parquet"
-                _shutil.copy(p, dst)
-                # strictly increasing mtimes: the file source orders
-                # micro-batches by modification time, and copy mtimes can
-                # collide within one clock tick
-                seq += 1
-                _os.utime(dst, (base_ts + seq, base_ts + seq))
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(
-            f"{work}/replay", log.schema, max_files_per_trigger=1
+        stream = StreamExecutionEnvironment(spark).from_batches(
+            [
+                log.where((F.col("version") >= lo) & (F.col("version") < hi))
+                for lo, hi in zip(bounds, bounds[1:])
+            ],
+            f"{work}/replay",
         )
         snap_dirs = [f"{work}/snap_a", f"{work}/snap_b"]
         state = {"cur": None, "flip": 0}
@@ -947,39 +937,10 @@ def q_late_side_output(spark, sf_dir):
     straggler = F.col("event_id") % 13 == 0
     work = tempfile.mkdtemp(prefix="fl_late_q_")
     try:
-        import os as _os
-        import time as _time
-
-        bounds = ["2024-01-01", "2024-01-08", "2024-01-15", "2024-01-22", "2024-02-01"]
-        _os.makedirs(f"{work}/replay")
-        base_ts = _time.time() - 3600
-        for i in range(len(bounds) - 1):
-            (
-                src.where(
-                    ~straggler
-                    & (F.col("ts") >= bounds[i])
-                    & (F.col("ts") < bounds[i + 1])
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{work}/b{i}")
-            )
-        src.where(straggler).coalesce(1).write.mode("overwrite").parquet(
-            f"{work}/b{len(bounds) - 1}"
+        stream = StreamExecutionEnvironment(spark).from_batches(
+            [*_week_batches(src.where(~straggler)), src.where(straggler)],
+            f"{work}/replay",
         )
-        import glob as _glob
-        import shutil as _shutil
-
-        seq = 0
-        for i in range(len(bounds)):
-            for p in sorted(_glob.glob(f"{work}/b{i}/part-*.parquet")):
-                seq += 1
-                dst = f"{work}/replay/part-{seq:03d}.parquet"
-                _shutil.copy(p, dst)
-                _os.utime(dst, (base_ts + seq, base_ts + seq))
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(f"{work}/replay", src.schema, max_files_per_trigger=1)
         late_dir, main_dir = f"{work}/late", f"{work}/main"
 
         def on_time(batch_df, _bid):
@@ -1026,39 +987,9 @@ def q_punctuated_watermark_split(spark, sf_dir):
     straggler = F.col("event_id") % 17 == 0
     work = tempfile.mkdtemp(prefix="fl_punct_q_")
     try:
-        import glob as _glob
-        import os as _os
-        import shutil as _shutil
-        import time as _time
-
-        bounds = ["2024-01-01", "2024-01-08", "2024-01-15", "2024-01-22", "2024-02-01"]
-        _os.makedirs(f"{work}/replay")
-        base_ts = _time.time() - 3600
-        for i in range(len(bounds) - 1):
-            (
-                src.where(
-                    ~straggler
-                    & (F.col("ts") >= bounds[i])
-                    & (F.col("ts") < bounds[i + 1])
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{work}/b{i}")
-            )
-        src.where(straggler).coalesce(1).write.mode("overwrite").parquet(
-            f"{work}/b{len(bounds) - 1}"
-        )
-        seq = 0
-        for i in range(len(bounds)):
-            for p in sorted(_glob.glob(f"{work}/b{i}/part-*.parquet")):
-                seq += 1
-                dst = f"{work}/replay/part-{seq:03d}.parquet"
-                _shutil.copy(p, dst)
-                _os.utime(dst, (base_ts + seq, base_ts + seq))
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(
-            f"{work}/replay", src.schema, max_files_per_trigger=1
+        stream = StreamExecutionEnvironment(spark).from_batches(
+            [*_week_batches(src.where(~straggler)), src.where(straggler)],
+            f"{work}/replay",
         )
         marked = stream.df.withColumn(
             "__wm", F.when(F.col("event_type") == "purchase", F.col("ts"))
@@ -1107,32 +1038,9 @@ def q_rowtime_sort_order(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_rtsort_q_")
     try:
-        import glob as _glob
-        import os as _os
-        import shutil as _shutil
-        import time as _time
-
-        bounds = ["2024-01-01", "2024-01-08", "2024-01-15", "2024-01-22", "2024-02-01"]
-        _os.makedirs(f"{work}/replay")
-        base_ts = _time.time() - 3600
-        seq_file = 0
-        for i in range(len(bounds) - 1):
-            (
-                src.where(
-                    (F.col("ts") >= bounds[i]) & (F.col("ts") < bounds[i + 1])
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{work}/b{i}")
-            )
-            for p in sorted(_glob.glob(f"{work}/b{i}/part-*.parquet")):
-                seq_file += 1
-                dst = f"{work}/replay/part-{seq_file:03d}.parquet"
-                _shutil.copy(p, dst)
-                _os.utime(dst, (base_ts + seq_file, base_ts + seq_file))
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(f"{work}/replay", src.schema, max_files_per_trigger=1)
+        stream = StreamExecutionEnvironment(spark).from_batches(
+            _week_batches(src), f"{work}/replay"
+        )
         out_dir = f"{work}/out"
         offset = {"n": 0}
 
@@ -1405,11 +1313,7 @@ def q_process_timer_alerts(spark, sf_dir):
     timer FIRES its onTimer branch (hasTimedOut → final alert).  Output:
     one 'gap' row per >1-day silence between consecutive events, one
     'final' row per key from the timer path."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
+    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     src = (
         read(spark, sf_dir, "events")
@@ -1424,26 +1328,11 @@ def q_process_timer_alerts(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_ptimer_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
-        waves = _distinct_waves(src)
-        n_waves = len(waves)
-        for i, w in enumerate(waves):
-            stage = f"{work}/stage/b{i}"
-            src.where(F.col("__wave") == w).drop("__wave").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
         # two sentinel batches: the first jumps the watermark past every
         # possible (last_ts + GAP) timer, the second gives Spark a batch
         # in which those now-expired timers fire
-        for i, far_us in enumerate(
-            (1_720_000_000_000_000, 1_720_000_001_000_000), start=n_waves
-        ):
-            sent = spark.createDataFrame(
+        sentinels = [
+            spark.createDataFrame(
                 [(-1, -1, far_us)], "user_id long, event_id long, __te long"
             ).select(
                 "user_id",
@@ -1451,12 +1340,11 @@ def q_process_timer_alerts(spark, sf_dir):
                 F.timestamp_micros(F.col("__te")).alias("ts"),
                 "__te",
             )
-            stage = f"{work}/stage/b{i}"
-            sent.coalesce(1).write.mode("overwrite").parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
+            for far_us in (1_720_000_000_000_000, 1_720_000_001_000_000)
+        ]
+        stream = StreamExecutionEnvironment(spark).from_batches(
+            [*_wave_batches(src), *sentinels], f"{work}/replay"
+        )
 
         gap_us = _PT_GAP_US
 
@@ -1487,14 +1375,6 @@ def q_process_timer_alerts(spark, sf_dir):
             if rows:
                 yield pd.DataFrame(rows, columns=cols)
 
-        from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(
-            f"{work}/replay",
-            "user_id long, event_id long, ts timestamp, __te long",
-            max_files_per_trigger=1,
-        )
         keyed = stream.assign_timestamps_and_watermarks("ts", "1 hour").key_by(
             "user_id"
         )
@@ -1521,7 +1401,7 @@ def q_process_timer_alerts(spark, sf_dir):
         )
         return res.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1544,41 +1424,24 @@ def q_stream_dedup_materialized(spark, sf_dir):
     a duplicate arriving waves later must be suppressed by state, not
     by within-batch logic.  The materialized survivor set must equal
     the batch keep-first formulation exactly."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
+    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     docs = read(spark, sf_dir, "documents").select(
         "doc_id", F.md5("text").alias("digest")
     )
     work = tempfile.mkdtemp(prefix="fl_sdedup_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
         bounds = [0, 100, 200, 300, 400, 10**9]
-        for i in range(len(bounds) - 1):
-            stage = f"{work}/stage/b{i}"
-            (
-                docs.where(
-                    (F.col("doc_id") >= bounds[i])
-                    & (F.col("doc_id") < bounds[i + 1])
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
-
         stream = (
-            spark.readStream.schema("doc_id long, digest string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{work}/replay")
-            .dropDuplicates(["digest"])  # keyed state across micro-batches
+            StreamExecutionEnvironment(spark)
+            .from_batches(
+                [
+                    docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+                    for lo, hi in zip(bounds, bounds[1:])
+                ],
+                f"{work}/replay",
+            )
+            .df.dropDuplicates(["digest"])  # keyed state across micro-batches
         )
         sink = f"{work}/out"
         q = (
@@ -1593,7 +1456,7 @@ def q_stream_dedup_materialized(spark, sf_dir):
         res = spark.read.parquet(sink).select("doc_id", "digest")
         return res.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1849,16 +1712,11 @@ def q_stream_cep_materialized(spark, sf_dir):
     only because the buffer carries partial matches across
     micro-batches — and the materialized match set must equal the
     batch lead-based formulation exactly."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
-
     from my_flink_1_10_2_spark.operators.cep import (
         Pattern,
         match_recognize_stream,
     )
+    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     src = (
         read(spark, sf_dir, "events")
@@ -1877,18 +1735,9 @@ def q_stream_cep_materialized(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_scep_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
-        for i, w in enumerate(_distinct_waves(src)):
-            stage = f"{work}/stage/b{i}"
-            src.where(F.col("__wave") == w).drop("__wave").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
-
+        stream = StreamExecutionEnvironment(spark).from_batches(
+            _wave_batches(src), f"{work}/replay"
+        ).df
         pattern = (
             Pattern.begin("a", lambda r, c: True)
             .next("b", lambda r, c: r["v"] < c["a"][-1]["v"])
@@ -1899,9 +1748,6 @@ def q_stream_cep_materialized(spark, sf_dir):
             "start_id": lambda m: int(m["a"][0]["event_id"]),
             "a_val_e4": lambda m: int(m["a"][0]["v"]),
         }
-        stream = spark.readStream.schema(
-            "user_id long, event_id long, v long, __ord string"
-        ).option("maxFilesPerTrigger", 1).parquet(f"{work}/replay")
         result = match_recognize_stream(
             stream,
             partition_by=["user_id"],
@@ -1925,7 +1771,7 @@ def q_stream_cep_materialized(spark, sf_dir):
         res = spark.read.parquet(sink).select("user_id", "start_id", "a_val_e4")
         return res.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2050,11 +1896,7 @@ def q_state_ttl_counter(spark, sf_dir):
     post-access counter and whether this access found its state
     expired — the full state-lifecycle history, not just final
     values."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
+    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     src = (
         read(spark, sf_dir, "events")
@@ -2069,18 +1911,9 @@ def q_state_ttl_counter(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_ttl_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
-        for i, w in enumerate(_distinct_waves(src)):
-            stage = f"{work}/stage/b{i}"
-            src.where(F.col("__wave") == w).drop("__wave").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
-
+        stream = StreamExecutionEnvironment(spark).from_batches(
+            _wave_batches(src), f"{work}/replay"
+        )
         ttl_us = _TTL_US
 
         def fn(key, pdfs, state):
@@ -2111,14 +1944,6 @@ def q_state_ttl_counter(spark, sf_dir):
             if rows:
                 yield pd.DataFrame(rows, columns=cols)
 
-        from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
-
-        env = StreamExecutionEnvironment(spark)
-        stream = env.from_files(
-            f"{work}/replay",
-            "user_id long, event_id long, ts timestamp, __te long",
-            max_files_per_trigger=1,
-        )
         keyed = stream.assign_timestamps_and_watermarks("ts", "1 hour").key_by(
             "user_id"
         )
@@ -2142,7 +1967,7 @@ def q_state_ttl_counter(spark, sf_dir):
         )
         return res.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2176,11 +2001,7 @@ def q_stream_semi_anti_materialized(spark, sf_dir):
     arrive — a far-future sentinel wave flushes the tail, exactly the
     reference's watermark-driven state cleanup.  The materialized sets
     must equal the batch EXISTS / NOT EXISTS formulations."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
+    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     src = (
         read(spark, sf_dir, "events")
@@ -2197,48 +2018,24 @@ def q_stream_semi_anti_materialized(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_semianti_")
     try:
-        base = _time.time() - 3600
-        far_us = 1_720_000_000_000_000
-        waves = _distinct_waves(src)
-        n_waves = len(waves)
-        for side in ("click", "purchase"):
-            _os.makedirs(f"{work}/replay_{side}")
-            for i, w in enumerate(waves):
-                stage = f"{work}/stage/{side}{i}"
-                (
-                    src.where(
-                        (F.col("event_type") == side) & (F.col("__wave") == w)
-                    )
-                    .drop("__wave", "event_type")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(stage)
-                )
-                (part,) = _glob.glob(f"{stage}/part-*.parquet")
-                dst = f"{work}/replay_{side}/part-{i:03d}.parquet"
-                _shutil.copy(part, dst)
-                _os.utime(dst, (base + i, base + i))
-            # sentinel wave: advances this side's watermark far enough to
-            # close every pending anti-join window on the OTHER side
-            sent = spark.createDataFrame(
-                [(-1, -1, far_us)], "event_id long, user_id long, te long"
-            ).select("event_id", "user_id", F.timestamp_micros("te").alias("ts"), "te")
-            stage = f"{work}/stage/{side}_sent"
-            sent.coalesce(1).write.mode("overwrite").parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay_{side}/part-{n_waves:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + n_waves, base + n_waves))
-
-        schema = "event_id long, user_id long, ts timestamp, te long"
+        env = StreamExecutionEnvironment(spark)
+        waves = _wave_batches(src)
+        # sentinel wave: advances each side's watermark far enough to
+        # close every pending anti-join window on the OTHER side
+        sent = spark.createDataFrame(
+            [(-1, -1, 1_720_000_000_000_000)], "event_id long, user_id long, te long"
+        ).select("event_id", "user_id", F.timestamp_micros("te").alias("ts"), "te")
+        replay = {
+            side: env.from_batches(
+                [w.where(F.col("event_type") == side).drop("event_type") for w in waves]
+                + [sent],
+                f"{work}/replay_{side}",
+            ).df
+            for side in ("click", "purchase")
+        }
 
         def mk(side, alias):
-            s = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{work}/replay_{side}")
-                .withWatermark("ts", "1 hour")
-            )
+            s = replay[side].withWatermark("ts", "1 hour")
             return s.select(*[F.col(c).alias(f"{alias}_{c}") for c in
                               ("event_id", "user_id", "ts", "te")])
 
@@ -2285,7 +2082,7 @@ def q_stream_semi_anti_materialized(spark, sf_dir):
         out = results["semi"].unionAll(results["anti"])
         return out.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2315,13 +2112,8 @@ def q_stream_kmv_merged(spark, sf_dir):
     definition), and the final merged estimate must equal the one-shot
     batch sketch over all events BITWISE — merge order cannot matter.
     """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
-
     from my_flink_1_10_2_spark.operators.sketch import _norm_hash
+    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     K = 64
     src = read(spark, sf_dir, "events").select(
@@ -2331,18 +2123,9 @@ def q_stream_kmv_merged(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_skmv_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
-        for i, w in enumerate(_distinct_waves(src)):
-            stage = f"{work}/stage/b{i}"
-            src.where(F.col("__wave") == w).drop("__wave").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
-
+        stream = StreamExecutionEnvironment(spark).from_batches(
+            _wave_batches(src), f"{work}/replay"
+        ).df
         sketch: list[float] = []  # the carried k-minimum values
 
         def merge_batch(batch_df, batch_id):
@@ -2357,11 +2140,6 @@ def q_stream_kmv_merged(spark, sf_dir):
             ]
             sketch = sorted(set(sketch) | set(part))[:K]
 
-        stream = (
-            spark.readStream.schema("event_id long, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{work}/replay")
-        )
         q = (
             stream.writeStream.foreachBatch(merge_batch)
             .option("checkpointLocation", f"{work}/ckpt")
@@ -2377,7 +2155,7 @@ def q_stream_kmv_merged(spark, sf_dir):
             [(est, len(sketch))], "estimate double, sketch_size bigint"
         )
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2412,11 +2190,7 @@ def q_stream_interval_join_pairs(spark, sf_dir):
     necessarily PAST the join bound — eviction only discards state whose
     matches are provably impossible, which is exactly the reference's
     cleanup-timer argument."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
+    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     src = (
         read(spark, sf_dir, "events")
@@ -2433,35 +2207,14 @@ def q_stream_interval_join_pairs(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_ivjoin_")
     try:
-        base = _time.time() - 3600
-        waves = _distinct_waves(src)
-        for side in ("click", "purchase"):
-            _os.makedirs(f"{work}/replay_{side}")
-            for i, w in enumerate(waves):
-                stage = f"{work}/stage/{side}{i}"
-                (
-                    src.where(
-                        (F.col("event_type") == side) & (F.col("__wave") == w)
-                    )
-                    .drop("__wave", "event_type")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(stage)
-                )
-                (part,) = _glob.glob(f"{stage}/part-*.parquet")
-                dst = f"{work}/replay_{side}/part-{i:03d}.parquet"
-                _shutil.copy(part, dst)
-                _os.utime(dst, (base + i, base + i))
-
-        schema = "event_id long, user_id long, ts timestamp, te long"
+        env = StreamExecutionEnvironment(spark)
+        waves = _wave_batches(src)
 
         def mk(side, alias):
-            s = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{work}/replay_{side}")
-                .withWatermark("ts", "1 hour")
-            )
+            s = env.from_batches(
+                [w.where(F.col("event_type") == side).drop("event_type") for w in waves],
+                f"{work}/replay_{side}",
+            ).df.withWatermark("ts", "1 hour")
             return s.select(
                 *[F.col(c).alias(f"{alias}_{c}") for c in
                   ("event_id", "user_id", "ts", "te")]
@@ -2497,7 +2250,7 @@ def q_stream_interval_join_pairs(spark, sf_dir):
         )
         return out.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2548,11 +2301,7 @@ def q_stream_session_windows(spark, sf_dir):
     Losslessness: waves are event-time ordered, so no row is ever behind
     the 1-hour watermark and a session only finalizes when every event
     that could merge into it is provably seen."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-    import tempfile
-    import time as _time
+    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
 
     src = (
         read(spark, sf_dir, "events")
@@ -2567,35 +2316,14 @@ def q_stream_session_windows(spark, sf_dir):
     )
     work = tempfile.mkdtemp(prefix="fl_sesswin_")
     try:
-        _os.makedirs(f"{work}/replay")
-        base = _time.time() - 3600
-        waves = _distinct_waves(src)
-        for i, w in enumerate(waves):
-            stage = f"{work}/stage/b{i}"
-            src.where(F.col("__wave") == w).drop("__wave").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            (part,) = _glob.glob(f"{stage}/part-*.parquet")
-            dst = f"{work}/replay/part-{i:03d}.parquet"
-            _shutil.copy(part, dst)
-            _os.utime(dst, (base + i, base + i))
         # sentinel: watermark past every possible session end
-        far_us = 1_720_000_000_000_000
         sent = spark.createDataFrame(
-            [(-1, far_us, 0)], "user_id long, te long, v_e4 long"
+            [(-1, 1_720_000_000_000_000, 0)], "user_id long, te long, v_e4 long"
         ).select("user_id", F.timestamp_micros("te").alias("ts"), "te", "v_e4")
-        stage = f"{work}/stage/sent"
-        sent.coalesce(1).write.mode("overwrite").parquet(stage)
-        (part,) = _glob.glob(f"{stage}/part-*.parquet")
-        dst = f"{work}/replay/part-{len(waves):03d}.parquet"
-        _shutil.copy(part, dst)
-        _os.utime(dst, (base + len(waves), base + len(waves)))
-
         stream = (
-            spark.readStream.schema("user_id long, ts timestamp, te long, v_e4 long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{work}/replay")
-            .withWatermark("ts", "1 hour")
+            StreamExecutionEnvironment(spark)
+            .from_batches([*_wave_batches(src), sent], f"{work}/replay")
+            .df.withWatermark("ts", "1 hour")
         )
         agg = (
             stream.groupBy("user_id", F.session_window("ts", "6 hours"))
@@ -2634,4 +2362,4 @@ def q_stream_session_windows(spark, sf_dir):
         )
         return out.localCheckpoint(eager=True)
     finally:
-        _shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)

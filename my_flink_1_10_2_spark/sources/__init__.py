@@ -4,10 +4,10 @@ Batch formats + bounded sources in :mod:`batch`; streaming sources,
 sinks and the exactly-once file-sink analog in :mod:`streaming`.
 """
 
+from my_flink_1_10_2_spark.operators.bucketing import write_bucketed  # noqa: F401
 from my_flink_1_10_2_spark.sources.batch import (  # noqa: F401
     from_elements,
     read_avro,
-    write_bucketed,
     read_csv,
     read_json,
     read_orc,

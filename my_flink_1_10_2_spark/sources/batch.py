@@ -256,28 +256,3 @@ def write_sequence_file(df: DataFrame, path: str):
     ).rdd.map(tuple)
     rdd.saveAsSequenceFile(path)
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-):
-    """Bucketed table sink — the co-located-join layout primitive
-    (SURVEY §4.2; ref analog: the reference optimizer's partitioning
-    properties, flink-optimizer/.../dataproperties/, which let it skip
-    re-partitioning when inputs are already hash-distributed).
-
-    Two tables bucketed on their join key with the same bucket count
-    join WITHOUT any Exchange: at 100 TB that deletes the two largest
-    shuffles of a fact-fact join. Buckets also pin the parallelism of
-    downstream scans, so `num_buckets` should match target-cluster
-    cores, not data size.
-    """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.option("path", path).format("parquet").saveAsTable(table)

@@ -40,12 +40,12 @@ double-appending (the round-4 driver-environment failure mode).
 
 from __future__ import annotations
 
-import glob
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from my_flink_1_10_2_spark.streaming.stream import StreamExecutionEnvironment
 
 END_OF_INPUT_WM = 9_000_000_000_000_000_000  # +inf watermark (bounded drain)
 
@@ -99,21 +99,11 @@ def continuous_early_fire_log(
     n_batches = len(batches)
     batch_index = {b: i for i, b in enumerate(batches)}
 
-    # one flat file per batch, strictly increasing mtimes — the file
-    # source orders micro-batches by modification time
-    import shutil
-
-    os.makedirs(f"{work}/replay", exist_ok=True)
-    base_ts = time.time() - 3600
-    for i, b in enumerate(batches):
-        stage = f"{work}/stage/b{i:03d}"
-        src.where(F.col(batch_col) == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        (part,) = glob.glob(f"{stage}/part-*.parquet")
-        dst = f"{work}/replay/part-{i:03d}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (base_ts + i, base_ts + i))
+    # ordered replay, one batch value per micro-batch: see
+    # StreamExecutionEnvironment.from_batches
+    replay = StreamExecutionEnvironment(spark).from_batches(
+        [src.where(F.col(batch_col) == b) for b in batches], f"{work}/replay"
+    )
 
     acc_dir, log_dir = f"{work}/acc", f"{work}/log"
     from my_flink_1_10_2_spark.streaming.state_dir import StateDir
@@ -227,10 +217,7 @@ def continuous_early_fire_log(
                 raise RuntimeError("injected mid-stream crash (test)")
 
     q = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/replay")
-        .writeStream.foreachBatch(handler)
+        replay.df.writeStream.foreachBatch(handler)
         .trigger(availableNow=True)
         .option("checkpointLocation", f"{work}/ckpt")
         .start()
@@ -280,20 +267,9 @@ def allowed_lateness_update_log(
     n_batches = len(batches)
     batch_index = {b: i for i, b in enumerate(batches)}
 
-    import glob
-    import shutil
-
-    os.makedirs(f"{work}/replay", exist_ok=True)
-    base_ts = time.time() - 3600
-    for i, b in enumerate(batches):
-        stage = f"{work}/stage/b{i:03d}"
-        src.where(F.col(batch_col) == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        (part,) = glob.glob(f"{stage}/part-*.parquet")
-        dst = f"{work}/replay/part-{i:03d}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (base_ts + i, base_ts + i))
+    replay = StreamExecutionEnvironment(spark).from_batches(
+        [src.where(F.col(batch_col) == b) for b in batches], f"{work}/replay"
+    )
 
     acc_dir, log_dir = f"{work}/acc", f"{work}/log"
     win_end = F.col(ts_col) - F.col(ts_col) % size_us + size_us
@@ -379,10 +355,7 @@ def allowed_lateness_update_log(
             on_batch(batch_df, bid)
 
     q = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/replay")
-        .writeStream.foreachBatch(handler)
+        replay.df.writeStream.foreachBatch(handler)
         .trigger(availableNow=True)
         .option("checkpointLocation", f"{work}/ckpt")
         .start()

@@ -195,7 +195,11 @@ class RetractionJoin:
         checkpoint: str | None = None,
     ):
         """Consume both streams to exhaustion (availableNow), feeding the
-        per-batch changelog to ``sink_fn``."""
+        per-batch changelog to ``sink_fn``.
+
+        Without ``checkpoint`` the run uses a throwaway checkpoint that is
+        removed when the run ends, so it cannot resume after a restart;
+        pass ``checkpoint=`` to make the run resumable."""
         union = self._tagged_union()
         lcols, rcols = self.left.columns, self.right.columns
 
@@ -223,10 +227,15 @@ class RetractionJoin:
         writer = (
             union.writeStream.foreachBatch(handle).trigger(availableNow=True)
         )
-        ckpt = checkpoint or tempfile.mkdtemp(prefix="fl_join_ckpt_")
-        q = writer.option("checkpointLocation", ckpt).start()
-        q.awaitTermination()
-        return q
+        owned = not checkpoint
+        ckpt = tempfile.mkdtemp(prefix="fl_join_ckpt_") if owned else checkpoint
+        try:
+            q = writer.option("checkpointLocation", ckpt).start()
+            q.awaitTermination()
+            return q
+        finally:
+            if owned:
+                shutil.rmtree(ckpt, ignore_errors=True)
 
     def cleanup(self) -> None:
         if self._owns_state:

@@ -25,8 +25,11 @@ deltas (SURVEY §7.2 step 6).
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 import tempfile
+import time
 import uuid
 from collections.abc import Callable
 
@@ -60,6 +63,33 @@ class StreamExecutionEnvironment:
             .option("maxFilesPerTrigger", max_files_per_trigger)
         )
         return Stream(reader.load(path))
+
+    def from_batches(self, batches: list[DataFrame], path: str) -> "Stream":
+        """Ordered micro-batch replay: batch *i* of ``batches`` arrives as
+        micro-batch *i* — the event-time-order contract that replayed
+        watermarks, sentinel flushes and carried state depend on.
+
+        Each batch is written (one job, ``coalesce(1)``) as exactly one
+        parquet file in ``path``, named by its list position and given a
+        strictly increasing mtime (the file source orders micro-batches
+        by modification time, and consecutive writes can share a clock
+        tick).  Re-staging the same list into the same ``path`` yields the
+        same file names, so a checkpointed query restarted on it skips the
+        files it already committed.  A watermark sentinel is just one more
+        DataFrame in the list; every batch must share ``batches[0]``'s
+        schema."""
+        stage = os.path.join(path, "_stage")
+        base = time.time() - 3600
+        try:
+            for i, batch in enumerate(batches):
+                batch.coalesce(1).write.mode("overwrite").parquet(f"{stage}/b{i}")
+                (part,) = glob.glob(f"{stage}/b{i}/part-*.parquet")
+                dst = os.path.join(path, f"batch-{i:05d}.parquet")
+                os.replace(part, dst)
+                os.utime(dst, (base + i, base + i))
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        return self.from_files(path, batches[0].schema)
 
     def socket_text_stream(self, host: str, port: int) -> "Stream":
         """(ref: StreamExecutionEnvironment.socketTextStream:1396)"""
@@ -289,14 +319,26 @@ class Stream:
 
     def for_each_batch(self, fn: Callable[[DataFrame, int], None], checkpoint: str | None = None):
         """foreachBatch sink (ref: addSink/TwoPhaseCommitSinkFunction —
-        exactly-once via Spark's checkpoint + idempotent batch writes)."""
-        writer = self.df.writeStream.foreachBatch(fn).trigger(availableNow=True)
-        if checkpoint is None:
+        exactly-once via Spark's checkpoint + idempotent batch writes).
+
+        Without ``checkpoint`` the run uses a throwaway checkpoint that is
+        removed when the availableNow run ends, so it cannot resume after
+        a restart; pass ``checkpoint=`` to make the run resumable."""
+        owned = checkpoint is None
+        if owned:
             checkpoint = tempfile.mkdtemp(prefix="fl_ckpt_")
-        writer = writer.option("checkpointLocation", checkpoint)
-        q = writer.start()
-        q.awaitTermination()
-        return q
+        try:
+            q = (
+                self.df.writeStream.foreachBatch(fn)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", checkpoint)
+                .start()
+            )
+            q.awaitTermination()
+            return q
+        finally:
+            if owned:
+                shutil.rmtree(checkpoint, ignore_errors=True)
 
     def for_each_batch_with_late_split(
         self,

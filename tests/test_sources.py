@@ -109,11 +109,11 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     orders = sources.read_parquet(spark, f"{SF_DIR}/orders.parquet")
     lineitem = sources.read_parquet(spark, f"{SF_DIR}/lineitem.parquet")
     sources.write_bucketed(
-        orders, "orders_b", str(tmp_path / "orders_b"), ["o_orderkey"], 8
+        orders, "orders_b", 8, "o_orderkey", path=str(tmp_path / "orders_b")
     )
     sources.write_bucketed(
         lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "lineitem_b", str(tmp_path / "lineitem_b"), ["o_orderkey"], 8,
+        "lineitem_b", 8, "o_orderkey", path=str(tmp_path / "lineitem_b"),
     )
     try:
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
