@@ -52,10 +52,9 @@ from my_flink_1_10_2_spark.llm.jpeg import (
     _BitWriter,
     _build_codes,
     _build_decoder,
-    _extend,
     _magnitude,
 )
-from my_flink_1_10_2_spark.llm.jpeg_color import _pad_plane
+from my_flink_1_10_2_spark.llm.jpeg_color import _decode_block, _pad_plane
 
 # Flat canonical Huffman tables covering the FULL 12-bit alphabet
 # (T.81 Annex C canonical construction; transmitted in DHT, so any
@@ -109,38 +108,6 @@ def _encode_block(w, zz, pred, dc_codes, ac_codes) -> int:
         code, ln = ac_codes[0x00]
         write(code, ln)
     return zz[0]
-
-
-def _decode_block(r, pred, dc_table, ac_table):
-    def read_code(table):
-        code, ln = 0, 0
-        while ln < 16:
-            code = (code << 1) | r.read(1)
-            ln += 1
-            if (ln, code) in table:
-                return table[(ln, code)]
-        raise ValueError("invalid Huffman code in scan")
-
-    zz = [0] * 64
-    size = read_code(dc_table)
-    diff = _extend(r.read(size), size) if size else 0
-    pred += diff
-    zz[0] = pred
-    i = 1
-    while i < 64:
-        rs = read_code(ac_table)
-        if rs == 0x00:
-            break
-        if rs == 0xF0:
-            i += 16
-            continue
-        run, size = rs >> 4, rs & 0x0F
-        i += run
-        if i > 63:
-            raise ValueError("AC run past block end")
-        zz[i] = _extend(r.read(size), size)
-        i += 1
-    return zz, pred
 
 
 def _fdct_grid12(padded: np.ndarray, gh: int, gw: int, q: np.ndarray,

@@ -21,6 +21,7 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from my_flink_1_10_2_spark.operators.iterate import released_on_exit
 from my_flink_1_10_2_spark.operators.rank import top_n
 
 
@@ -560,46 +561,40 @@ def kmeans_centroids_int(
     vi = int_vec(F.col(vec_col), scale)
     ci = corpus.select(F.col(id_col).alias("__id"), vi.alias("__vi"))
     spark = corpus.sparkSession
-    new_ids: set[int] = set()
-    if iterations > 0:
-        # Fan the quantized corpus out toward the session's parallelism
-        # when the scan gives too few partitions (small files): each
-        # Lloyd step's cost is per-row BLAS work inside the kernel, so
-        # idle cores are pure loss at real corpus sizes.  SIZE-GATED:
-        # one fanned partition per ~4 MB of input (plan-stats estimate),
-        # because on tiny inputs the per-task Arrow/scheduling overhead
-        # of the iterative kernel outweighs the parallelism (measured at
-        # sf0.1: 2000 rows / 0.8 MB — unconditional 32-way fan-out cost
-        # +0.5 s wall for ~1 ms of parallelizable BLAS).  At 100 TB the
-        # scan already has thousands of partitions and this is a no-op.
-        # The repartition happens BEFORE the checkpoint, so every
-        # iteration reads the fanned-out blocks without re-shuffling.
-        target = spark.sparkContext.defaultParallelism
-        cur_parts = ci.rdd.getNumPartitions()
-        if cur_parts < target:
-            try:
-                size = int(
-                    str(ci._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    with released_on_exit(spark):
+        if iterations > 0:
+            # Fan the quantized corpus out toward the session's parallelism
+            # when the scan gives too few partitions (small files): each
+            # Lloyd step's cost is per-row BLAS work inside the kernel, so
+            # idle cores are pure loss at real corpus sizes.  SIZE-GATED:
+            # one fanned partition per ~4 MB of input (plan-stats estimate),
+            # because on tiny inputs the per-task Arrow/scheduling overhead
+            # of the iterative kernel outweighs the parallelism (measured at
+            # sf0.1: 2000 rows / 0.8 MB — unconditional 32-way fan-out cost
+            # +0.5 s wall for ~1 ms of parallelizable BLAS).  At 100 TB the
+            # scan already has thousands of partitions and this is a no-op.
+            # The repartition happens BEFORE the checkpoint, so every
+            # iteration reads the fanned-out blocks without re-shuffling.
+            target = spark.sparkContext.defaultParallelism
+            cur_parts = ci.rdd.getNumPartitions()
+            if cur_parts < target:
+                try:
+                    stats = ci._jdf.queryExecution().optimizedPlan().stats()
+                    size = int(str(stats.sizeInBytes()))
+                except Exception:
+                    size = None
+                parts = (
+                    target if size is None
+                    else max(1, min(target, size // (4 << 20)))
                 )
-            except Exception:
-                size = None
-            parts = (
-                target if size is None
-                else max(1, min(target, size // (4 << 20)))
-            )
-            if parts > cur_parts:
-                ci = ci.repartition(parts)
-        # pin the quantized corpus for the Lloyd loop: each iteration
-        # reads the materialized blocks instead of re-scanning +
-        # re-quantizing the source (released after training)
-        # lazy: the init collect below is the job that materializes it
-        # (one scheduler round-trip instead of two)
-        before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-        ci = ci.localCheckpoint(eager=False)
-        new_ids = (
-            set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
-        )
-    try:
+                if parts > cur_parts:
+                    ci = ci.repartition(parts)
+            # pin the quantized corpus for the Lloyd loop: each iteration
+            # reads the materialized blocks instead of re-scanning +
+            # re-quantizing the source (released when training returns)
+            # lazy: the init collect below is the job that materializes it
+            # (one scheduler round-trip instead of two)
+            ci = ci.localCheckpoint(eager=False)
         cents = [
             (i, [int(x) for x in r["__vi"]])
             for i, r in enumerate(ci.orderBy("__id").limit(k).collect())
@@ -655,11 +650,6 @@ def kmeans_centroids_int(
                     acc[r["centroid"]] = [int(x) for x in r["s"]]
             cents = [(c, acc.get(c, v)) for c, v in cents]
         return cents
-    finally:
-        if new_ids:
-            from my_flink_1_10_2_spark.operators.iterate import free_checkpoints
-
-            free_checkpoints(spark, new_ids)
 
 
 def cosine_topk_ivf_int(

@@ -15,6 +15,8 @@ relation is checkpointed once and reused every round; vertex state is
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -23,6 +25,23 @@ from my_flink_1_10_2_spark.operators.iterate import (
     free_checkpoints,
     iterate,
 )
+
+
+def _count_unchanged() -> Callable[[DataFrame, DataFrame], bool]:
+    """Convergence criterion for :func:`iterate` over a state that only
+    shrinks (a peel) or only grows (a BFS): an unchanged row count is an
+    unchanged state.  Each state is counted once — the count of `new`
+    is reused as the next round's `prev` — and that count is the job
+    that materializes the lazy checkpoint."""
+    counts: list[int] = []
+
+    def converged(prev: DataFrame, new: DataFrame) -> bool:
+        if not counts:
+            counts.append(prev.count())
+        counts.append(new.count())
+        return counts[-1] == counts[-2]
+
+    return converged
 
 
 def _nodes(e: DataFrame, src: str, dst: str) -> DataFrame:
@@ -575,7 +594,6 @@ def k_core(
     max_rounds: int = 20,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly drop
     vertices with (undirected) degree < k until a fixpoint — the
@@ -589,16 +607,7 @@ def k_core(
     handful of vertices — so AQE plans the anti-joins as broadcasts and
     the only shuffle per round is the degree aggregation itself.  The
     edge relation shrinks monotonically, so at 100 TB the rounds get
-    cheaper as the periphery peels away.  Converges in <= max_rounds
-    (the convergence check runs at checkpoint rounds; an extra
-    already-converged peel round is a no-op, so checking every
-    ``checkpoint_every`` rounds stays exact).
-
-    ``checkpoint_every``: localCheckpoint+count cadence — each
-    materialization is a full Spark action, and letting two peel rounds
-    ride one lineage before truncating cut the measured per-round fixed
-    cost ~20% (lineage stays shallow: 2 joins per un-checkpointed
-    round).
+    cheaper as the periphery peels away.  Converges in <= max_rounds.
 
     Returns the k-core's (node, degree) with degrees measured in the
     core subgraph.
@@ -609,35 +618,27 @@ def k_core(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    cur, cur_ids = checkpoint_tracked(sym, eager=False)
-    spark = edges.sparkSession
-    prev_edges = cur.count()  # also materializes the symmetrized base
-    for r in range(1, max_rounds + 1):
+
+    def peel(cur: DataFrame, _i: int) -> DataFrame:
         removed = (
             cur.groupBy("a")
             .agg(F.count("*").alias("__deg"))
             .where(F.col("__deg") < k)
             .select("a")
         )
-        nxt = cur.join(removed, "a", "left_anti").join(
+        return cur.join(removed, "a", "left_anti").join(
             removed.select(F.col("a").alias("b")), "b", "left_anti"
         )
-        if r % checkpoint_every == 0 or r == max_rounds:
-            # lazy checkpoint + count: the count job IS the
-            # materialization (one action per checkpoint round, not two)
-            nxt, nxt_ids = checkpoint_tracked(nxt, eager=False)
-            n_edges = nxt.count()  # materializes the round's checkpoint
-            free_checkpoints(spark, cur_ids)
-            cur, cur_ids = nxt, nxt_ids
-            if n_edges == prev_edges:  # nothing peeled -> fixpoint
-                break
-            prev_edges = n_edges
-        else:
-            cur = nxt
-    out = cur.groupBy(F.col("a").alias("node")).agg(
+
+    # two peel rounds ride one lineage per checkpoint: an already-
+    # converged extra round is a no-op, and the fusion cut the measured
+    # per-round fixed cost ~20%
+    core = iterate(
+        sym, peel, max_rounds, _count_unchanged(), steps_per_checkpoint=2
+    )
+    return core.groupBy(F.col("a").alias("node")).agg(
         F.count("*").alias("degree")
     )
-    return out
 
 
 def scatter_gather(
@@ -675,12 +676,6 @@ def scatter_gather(
     superstep, vertex state |V|-sized, superseded checkpoints freed
     eagerly.
     """
-    from my_flink_1_10_2_spark.operators.iterate import (
-        checkpoint_tracked,
-        free_checkpoints,
-        iterate,
-    )
-
     e, e_ids = checkpoint_tracked(edges)
 
     def step(verts: DataFrame, _i: int) -> DataFrame:
@@ -765,8 +760,7 @@ def closeness_centrality(
     Sources are the ``n_sources`` lowest vertex ids.  BFS runs as
     min-distance fixpoint iterations (each round: frontier ⋈ edges →
     min per (source, node)); the per-source relation is
-    sources×vertices — bounded — and the loop early-stops when the
-    distance set is stable (driver sees one scalar per round).
+    sources×vertices — bounded.
 
     Outputs per source: ``n_reached``, ``total_dist``, closeness
     ``(n_reached-1)/total_dist`` (one IEEE division of exact ints) and
@@ -777,25 +771,26 @@ def closeness_centrality(
     sources = nodes.orderBy("node").limit(n_sources).select(
         F.col("node").alias("source")
     )
-    dist = sources.select(
-        "source", F.col("source").alias("node"), F.lit(0).alias("d")
-    ).localCheckpoint(eager=True)
-    prev_n = dist.count()
-    for _ in range(max_iters):
-        expand = (
+
+    def expand(dist: DataFrame, _i: int) -> DataFrame:
+        reached = (
             dist.join(sym, dist["node"] == sym["u"])
             .select("source", F.col("v").alias("node"), (F.col("d") + 1).alias("d"))
         )
-        dist = (
-            dist.unionByName(expand)
+        return (
+            dist.unionByName(reached)
             .groupBy("source", "node")
             .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
         )
-        n = dist.count()
-        if n == prev_n:
-            break
-        prev_n = n
+
+    dist = iterate(
+        sources.select(
+            "source", F.col("source").alias("node"), F.lit(0).alias("d")
+        ),
+        expand,
+        max_iters,
+        _count_unchanged(),
+    )
     per_d = dist.where(F.col("d") > 0)
     return (
         per_d.groupBy("source")
@@ -846,6 +841,9 @@ def stress_centrality(
     the pair sum is an equi-join of that relation with itself on the
     middle vertex.  All counts are exact BIGINT.
     """
+    # Its own loop, not iterate(): the state is TWO relations (settled +
+    # frontier) and the stop test is an empty frontier; on iterate() the
+    # same rows cost one extra Spark job (34 vs 33 at sf0.01).
     sym = _sym(edges, src, dst).localCheckpoint(eager=True)
     nodes = _nodes(sym, "u", "v")
     sources = nodes.orderBy("node").limit(n_sources).select(
@@ -930,22 +928,16 @@ def k_truss(
     sharpening of :func:`k_core` (every k-truss is inside the
     (k-1)-core, but trusses demand cohesion, not just degree).
 
-    Iterative peel to fixpoint: per round, one wedge join (the
-    symmetrized adjacency joined with itself on the shared endpoint)
-    closed against the canonical edge set counts each edge's triangle
-    support, then edges under k-2 drop.  The edge relation shrinks
-    monotonically, so rounds get cheaper; all joins are hash equi-joins
-    keyed on vertices — the identical data movement as the graded
-    triangle count, run |peel rounds| times.
+    Peel to fixpoint: per round, one wedge join (the symmetrized
+    adjacency joined with itself on the shared endpoint) closed against
+    the canonical edge set counts each edge's triangle support, then
+    edges under k-2 drop.  The edge relation shrinks monotonically, so
+    rounds get cheaper; all joins are hash equi-joins keyed on vertices
+    — the identical data movement as the graded triangle count.
 
     Returns the truss's canonical edges with their in-truss support:
     (a, b, support), a < b.
     """
-    from my_flink_1_10_2_spark.operators.iterate import (
-        checkpoint_tracked,
-        free_checkpoints,
-    )
-
     need = k - 2
     ed = (
         edges.select(
@@ -954,14 +946,12 @@ def k_truss(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
+        .withColumn("support", F.lit(None).cast("bigint"))
     )
-    cur, cur_ids = checkpoint_tracked(ed, eager=False)
-    n_edges = cur.count()  # materializes the lazy checkpoint
-    spark = edges.sparkSession
-    for _ in range(max_rounds):
-        sym = cur.select("a", "b").union(
-            cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
+
+    def peel(cur: DataFrame, _i: int) -> DataFrame:
+        cur = cur.select("a", "b")
+        sym = cur.union(cur.select(F.col("b").alias("a"), F.col("a").alias("b")))
         s1 = sym.select(F.col("a").alias("u"), F.col("b").alias("w"))
         s2 = sym.select(F.col("a").alias("v"), F.col("b").alias("w2"))
         sup = (
@@ -970,17 +960,6 @@ def k_truss(
             .groupBy(cur.a, cur.b)
             .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
         )
-        nxt = sup.where(F.col("support") >= need).select("a", "b", "support")
-        nxt, nxt_ids = checkpoint_tracked(nxt, eager=False)
-        n_next = nxt.count()  # materializes the lazy checkpoint
-        free_checkpoints(spark, cur_ids)
-        cur, cur_ids = nxt.select("a", "b"), nxt_ids
-        if n_next == n_edges:
-            out = nxt
-            break
-        n_edges = n_next
-    else:
-        out = nxt
-    result = out.localCheckpoint(eager=True)
-    free_checkpoints(spark, cur_ids)
-    return result
+        return sup.where(F.col("support") >= need).select("a", "b", "support")
+
+    return iterate(ed, peel, max_rounds, _count_unchanged())

@@ -6,7 +6,7 @@ src/main/java/org/apache/flink/graph/Graph.java, library/
 ConnectedComponents.java).
 
 Spark has no native iteration operator; the idiomatic equivalent is a
-driver-side loop over DataFrames. Two things make that correct at scale:
+driver-side loop over DataFrames. Three things make that correct at scale:
 
   - **Lineage truncation**: each superstep's result is
     ``localCheckpoint``-ed, otherwise the plan grows linearly with the
@@ -23,11 +23,28 @@ driver-side loop over DataFrames. Two things make that correct at scale:
     from the block manager long before the loop converges.  The helpers
     below track the RDD ids each checkpoint persists and free them the
     moment the next superstep is materialized.
+
+This module is the ONE owner of that policy: every driver loop in the
+engine cuts lineage and frees blocks through it, either by running on
+:func:`iterate` / :func:`iterate_delta` or by wrapping its body in
+:func:`released_on_exit`.  Drivers:
+
+  - :func:`iterate` — :func:`connected_components`, and in
+    ``operators/gelly.py`` pagerank, label_propagation, sssp, hits,
+    community_detection, scatter_gather, k_core, k_truss and
+    closeness_centrality;
+  - :func:`iterate_delta` — :func:`connected_components_delta`;
+  - :func:`released_on_exit` — ``llm/bpe.train_bpe``, the Lloyd trainer
+    in ``llm/similarity.py``, ``sources/sharding.assign_contiguous_shards``
+    and each micro-batch of ``streaming/stream.Stream.iterate``.
+
+``stress_centrality`` keeps its own loop (see the comment there).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -79,6 +96,23 @@ def free_checkpoints(spark, ids: set[int]) -> None:
             r.unpersist()
 
 
+@contextmanager
+def released_on_exit(spark) -> Iterator[None]:
+    """Free, when the ``with`` body exits (normally or by raising), every
+    block persisted inside it — the checkpoints of a driver loop whose
+    result does not reference them (a driver-side value, a collect, or
+    rows already handed to a sink), including pins taken by the
+    operators it calls.  A frame derived from such a pin must be
+    consumed inside the body.  Blocks another thread of the same
+    SparkContext persists during the body are freed too, so wrap only
+    work the calling thread drives to completion."""
+    before = _persistent_rdd_ids(spark)
+    try:
+        yield
+    finally:
+        free_checkpoints(spark, _persistent_rdd_ids(spark) - before)
+
+
 def iterate(
     initial: DataFrame,
     step: Callable[[DataFrame, int], DataFrame],
@@ -95,9 +129,9 @@ def iterate(
     Job-count discipline (each Spark action is a full scheduler
     round-trip, the fixed cost that dominates iterative workloads):
 
-    - with ``converged``, the checkpoint is LAZY and the convergence
-      measurement is the job that materializes it — one job per
-      checkpoint instead of checkpoint + measure;
+    - with ``converged``, every checkpoint (the initial one included) is
+      LAZY and the convergence measurement is the job that materializes
+      it — one job per checkpoint instead of checkpoint + measure;
     - ``steps_per_checkpoint`` fuses that many steps into one checkpoint
       (exactly ``max_iterations`` steps still run — the tail chunk is
       shorter).  With a convergence criterion the check then runs every
@@ -106,7 +140,9 @@ def iterate(
       overshoot changes the result.
     """
     spark = initial.sparkSession
-    current, cur_ids = checkpoint_tracked(initial)
+    # lazy when measured: the first convergence check (over `prev`, or
+    # over `new` with the initial state as its upstream) materializes it
+    current, cur_ids = checkpoint_tracked(initial, eager=converged is None)
     done_steps = 0
     while done_steps < max_iterations:
         chunk = min(steps_per_checkpoint, max_iterations - done_steps)

@@ -84,11 +84,6 @@ def _read_shortstr(buf: bytes, off: int) -> tuple[str, int]:
     return buf[off + 1 : off + 1 + n].decode(), off + 1 + n
 
 
-def _read_longstr(buf: bytes, off: int) -> tuple[bytes, int]:
-    (n,) = struct.unpack_from(">I", buf, off)
-    return buf[off + 4 : off + 4 + n], off + 4 + n
-
-
 def frame(ftype: int, channel: int, payload: bytes) -> bytes:
     return (
         struct.pack(">BHI", ftype, channel, len(payload))

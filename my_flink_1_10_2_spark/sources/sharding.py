@@ -46,26 +46,22 @@ def assign_contiguous_shards(
     count is metadata-scale by construction — it is also the number of
     output files).
     """
-    from my_flink_1_10_2_spark.operators.iterate import (
-        _persistent_rdd_ids,
-        free_checkpoints,
-    )
+    from my_flink_1_10_2_spark.operators.iterate import released_on_exit
     from my_flink_1_10_2_spark.operators.rank import global_rank
 
     spark = df.sparkSession
-    before = _persistent_rdd_ids(spark)
-    ranked = global_rank(
-        df.select(key_col), [F.asc(key_col)], rank_col="__rk"
-    )
-    bounds = sorted(
-        r[0]
-        for r in ranked.where(F.col("__rk") % samples_per_shard == 0)
-        .select(key_col)
-        .collect()
-    )
     # the keys-only rank machinery pins a (narrow) lazy checkpoint;
     # nothing derived from it survives past the collect — release it
-    free_checkpoints(spark, _persistent_rdd_ids(spark) - before)
+    with released_on_exit(spark):
+        ranked = global_rank(
+            df.select(key_col), [F.asc(key_col)], rank_col="__rk"
+        )
+        bounds = sorted(
+            r[0]
+            for r in ranked.where(F.col("__rk") % samples_per_shard == 0)
+            .select(key_col)
+            .collect()
+        )
     if not bounds:
         return df.withColumn(shard_col, F.lit(0).cast("bigint"))
     bc = spark.sparkContext.broadcast(bounds)

@@ -36,6 +36,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from my_flink_1_10_2_spark.operators.iterate import released_on_exit
+
 
 def _col(e):
     return e if isinstance(e, Column) else F.expr(e)
@@ -557,7 +559,9 @@ class Stream:
         superstep persists its feedback set (usually a small, shrinking
         fraction of the batch) and nothing ever collects to the driver.
         Lineage is cut every few supersteps with ``localCheckpoint`` —
-        the same guard the batch iterators use (operators/iterate.py).
+        the same guard the batch iterators use (operators/iterate.py) —
+        and the cuts are freed when the micro-batch ends, so ``emit_fn``
+        must consume its frame (write or collect it) before returning.
         """
         pred = (
             F.expr(feedback_predicate)
@@ -566,25 +570,28 @@ class Stream:
         )
 
         def handle(batch_df: DataFrame, batch_id: int) -> None:
-            current = batch_df
-            for superstep in range(max_iterations):
-                if current.isEmpty():
-                    break
-                out = step(current)
-                fb = out.filter(pred)
-                exits = out.filter(~pred)
-                if superstep % 5 == 4:
-                    # cut the per-superstep lineage growth (plan depth is
-                    # O(supersteps) otherwise — the iterate.py guard)
-                    fb = fb.localCheckpoint(eager=True)
-                emit_fn(exits, batch_id)
-                current = fb
-            else:
-                if not current.isEmpty():
-                    raise RuntimeError(
-                        f"iteration did not converge within {max_iterations} "
-                        "supersteps (reference analog: feedback timeout)"
-                    )
+            # the lineage cuts live for one micro-batch: every exit frame
+            # derived from them has reached emit_fn when the batch ends
+            with released_on_exit(batch_df.sparkSession):
+                current = batch_df
+                for superstep in range(max_iterations):
+                    if current.isEmpty():
+                        break
+                    out = step(current)
+                    fb = out.filter(pred)
+                    exits = out.filter(~pred)
+                    if superstep % 5 == 4:
+                        # cut the per-superstep lineage growth (plan depth
+                        # is O(supersteps) otherwise — the iterate.py guard)
+                        fb = fb.localCheckpoint(eager=True)
+                    emit_fn(exits, batch_id)
+                    current = fb
+                else:
+                    if not current.isEmpty():
+                        raise RuntimeError(
+                            f"iteration did not converge within {max_iterations} "
+                            "supersteps (reference analog: feedback timeout)"
+                        )
 
         return self.for_each_batch(handle, checkpoint)
 

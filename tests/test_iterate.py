@@ -3,6 +3,7 @@ flink-gelly library/ConnectedComponents.java)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -224,3 +225,87 @@ def test_iterate_delta_frees_blocks_on_step_exception(spark):
         raise AssertionError("step exception must propagate")
     resident = len(sc._jsc.getPersistentRDDs())
     assert resident == 0, f"{resident} persisted RDDs leaked on the exception path"
+
+
+_TOY_EDGES = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)]
+
+
+def _run_train_bpe(spark, tmp_path):
+    from my_flink_1_10_2_spark.llm.bpe import train_bpe
+
+    docs = spark.createDataFrame(
+        [("low lower lowest",), ("newer wider newest",)], "text string"
+    )
+    merges = train_bpe(docs, num_merges=4).collect()
+    assert [m.step for m in merges] == [1, 2, 3, 4]
+
+
+def _run_stream_iterate(spark, tmp_path):
+    from my_flink_1_10_2_spark.streaming import StreamExecutionEnvironment
+
+    batches = [
+        spark.createDataFrame(rows, "id long, vi long")
+        for rows in ([(1, 1000), (2, 40)], [(3, 500)])
+    ]
+    stream = StreamExecutionEnvironment(spark).from_batches(
+        batches, str(tmp_path / "replay")
+    )
+    exits: list = []
+    stream.iterate(  # vi=1000 feeds back 10 times: two lineage cuts
+        step=lambda df: df.withColumn("vi", F.col("vi") - 97),
+        feedback_predicate="vi > 0",
+        emit_fn=lambda df, _bid: exits.extend(df.collect()),
+        max_iterations=16,
+    )
+    assert {r.id: r.vi for r in exits} == {1: -67, 2: -57, 3: -82}
+
+
+def _toy_graph(spark):
+    return spark.createDataFrame(_TOY_EDGES, "src long, dst long")
+
+
+def _run_closeness(spark, tmp_path):
+    from my_flink_1_10_2_spark.operators.gelly import closeness_centrality
+
+    out = closeness_centrality(_toy_graph(spark), n_sources=2).collect()
+    assert {r.source: (r.n_reached, r.total_dist) for r in out} == {
+        1: (6, 8), 2: (6, 8),
+    }
+
+
+def _run_k_core(spark, tmp_path):
+    from my_flink_1_10_2_spark.operators.gelly import k_core
+
+    out = k_core(_toy_graph(spark), k=3).collect()
+    assert sorted(map(tuple, out)) == [(1, 3), (2, 3), (3, 3), (4, 3)]
+
+
+def _run_k_truss(spark, tmp_path):
+    from my_flink_1_10_2_spark.operators.gelly import k_truss
+
+    out = k_truss(_toy_graph(spark), k=4).collect()
+    assert sorted(map(tuple, out)) == [(a, b, 2) for a, b in _TOY_EDGES[:6]]
+
+
+@pytest.mark.parametrize(
+    "run, max_resident",
+    [
+        (_run_train_bpe, 0),
+        (_run_stream_iterate, 0),
+        (_run_closeness, 1),
+        (_run_k_core, 1),
+        (_run_k_truss, 1),
+    ],
+    ids=["train_bpe", "stream_iterate", "closeness", "k_core", "k_truss"],
+)
+def test_driver_loops_release_their_blocks(spark, tmp_path, run, max_resident):
+    """Every driver loop frees its lineage cuts through operators/
+    iterate.py: a loop whose result is built on the driver (BPE's merge
+    table, a stream's emitted exits) leaves nothing resident; a graph
+    loop keeps at most its final state."""
+    sc = spark.sparkContext
+    for r in list(sc._jsc.getPersistentRDDs().values()):
+        r.unpersist()
+    run(spark, tmp_path)
+    resident = len(sc._jsc.getPersistentRDDs())
+    assert resident <= max_resident, f"{resident} persisted RDDs left resident"

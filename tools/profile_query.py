@@ -3,6 +3,8 @@
 For each named query: warm-run once, then time a noop-sink run while
 counting Spark jobs/stages/tasks via the status tracker, and write
 ``.explain("formatted")`` to plans/<tag>/<name>_<suffix>.txt.
+``pinned`` is the number of persistent RDDs the first run leaves behind
+(blocks an operator failed to release), counted before the cleanup.
 
 Usage:
   python tools/profile_query.py [--sf DIR] [--runs N] [--plans TAG:SUFFIX] q1 q2 ...
@@ -49,6 +51,8 @@ def main() -> None:
             r.unpersist()
         spark.catalog.clearCache()
 
+    cleanup()  # the warm-up's pins must not count as the first query's
+
     out = {}
     for name in args.queries:
         q = reg[name]
@@ -67,7 +71,7 @@ def main() -> None:
                 )
             cleanup()
         samples = []
-        jobs = stages = tasks = 0
+        jobs = stages = tasks = pinned = 0
         for r in range(args.runs):
             group = f"prof_{name}_{r}"
             sc.setJobGroup(group, name)
@@ -76,6 +80,7 @@ def main() -> None:
             samples.append(time.perf_counter() - t0)
             job_ids = tracker.getJobIdsForGroup(group)
             if r == 0:
+                pinned = len(sc._jsc.getPersistentRDDs())
                 jobs = len(job_ids)
                 for j in job_ids:
                     ji = tracker.getJobInfo(j)
@@ -95,6 +100,7 @@ def main() -> None:
             "jobs": jobs,
             "stages": stages,
             "tasks": tasks,
+            "pinned": pinned,
         }
         print(f"# {name}: {out[name]}", file=sys.stderr)
     print(json.dumps(out, indent=1))
